@@ -42,7 +42,7 @@ from us_accidents_bigdata_pipeline_spark.operators.clean import (
 from us_accidents_bigdata_pipeline_spark.operators.sample import deterministic_split
 from us_accidents_bigdata_pipeline_spark.sources.accidents import generate_accidents_raw
 
-from .conftest import SF_ORACLE
+from .conftest import SF_ORACLE, finished_jobs, last_job_id, stage_pools
 
 FEATURES = [
     "Distance_mi",
@@ -205,6 +205,32 @@ def test_kmeans_sweep_and_stats(accidents_cleaned):
     assert len(model.clusterCenters()) == best_k
 
 
+def test_kmeans_sweep_jobs_keep_callers_group_and_pool(spark, accidents_cleaned):
+    """k_sweep fits its candidates on a thread pool; every job those
+    threads submit must carry the caller's job group and FAIR pool (a
+    pipeline stage's pool and cancellation tag ride on the same local
+    properties)."""
+    geo = accidents_cleaned.select("Start_Lat", "Start_Lng")
+    feat, _ = assemble_and_scale(geo, ["Start_Lat", "Start_Lng"])
+    feat = feat.cache()
+    feat.count()
+    sc = spark.sparkContext
+    before = last_job_id(spark)
+    sc.setJobGroup("kmeans-sweep-test", "k_sweep job group probe")
+    sc.setLocalProperty("spark.scheduler.pool", "kmeans")
+    try:
+        k_sweep(feat, [2, 3], max_iter=5)
+    finally:
+        sc._jsc.clearJobGroup()
+        sc.setLocalProperty("spark.scheduler.pool", None)
+        feat.unpersist()
+    jobs = finished_jobs(spark, before)
+    assert len(jobs) >= 4  # at least a fit and a silhouette per k
+    groups = {j.jobGroup().get() if j.jobGroup().isDefined() else None for j in jobs}
+    assert groups == {"kmeans-sweep-test"}
+    assert set(stage_pools(spark, jobs).values()) == {"kmeans"}
+
+
 def test_string_indexer_frequency_order(spark):
     df = spark.createDataFrame(
         [("a",), ("b",), ("b",), ("c",), ("b",), ("c",)], ["cat"]
@@ -297,7 +323,7 @@ def test_fpgrowth_small_itemsets_match_sql(spark):
     co-occurrence) — an in-Spark twin of the catalog entry's Apriori
     DuckDB oracle (sizes 1-3)."""
     from us_accidents_bigdata_pipeline_spark.plans.queries import REGISTRY
-    from .conftest import SF_ORACLE
+    from .conftest import SF_ORACLE, finished_jobs, last_job_id, stage_pools
 
     rows = REGISTRY["fpgrowth_itemsets"].builder(spark, SF_ORACLE).collect()
     import json
@@ -351,7 +377,7 @@ def test_pca_matches_numpy_eig(spark):
     import numpy as np
     from pyspark.ml.feature import PCA
     from pyspark.ml.functions import array_to_vector, vector_to_array
-    from .conftest import SF_ORACLE
+    from .conftest import SF_ORACLE, finished_jobs, last_job_id, stage_pools
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("a")
@@ -398,7 +424,7 @@ def test_pca2_exact_matches_numpy(spark):
     import numpy as np
 
     from us_accidents_bigdata_pipeline_spark.ml.pca import pca2_exact
-    from .conftest import SF_ORACLE
+    from .conftest import SF_ORACLE, finished_jobs, last_job_id, stage_pools
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     got = {
@@ -429,7 +455,7 @@ def test_pca_projection_signed_deterministic(spark):
     from us_accidents_bigdata_pipeline_spark.ml.pca import (
         pca_projection_signed,
     )
-    from .conftest import SF_ORACLE
+    from .conftest import SF_ORACLE, finished_jobs, last_job_id, stage_pools
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     a = sorted(map(tuple, pca_projection_signed(emb, k=2).collect()))

@@ -969,3 +969,37 @@ def test_ivf_recall_curve_topk_uses_window_group_limit(spark):
     the whole corpus through n_queries window partitions."""
     plan = plan_of(spark, "ivf_recall_curve")
     assert plan.count("WindowGroupLimit") >= 4, plan
+
+
+class _Scan:
+    """Stand-in for a DataFrame: only ``inputFiles`` is consulted
+    before the split decision."""
+
+    def __init__(self, files=(), error: BaseException | None = None):
+        self.files, self.error = list(files), error
+
+    def inputFiles(self):
+        if self.error is not None:
+            raise self.error
+        return self.files
+
+
+def test_adaptive_input_split_falls_back_only_on_expected_errors(spark):
+    """The input split is an optimisation: an unreadable file list or
+    file size leaves the scan untouched, but any other exception is a
+    bug and must surface instead of silently disabling the split."""
+    from pyspark.errors import PySparkException
+
+    from us_accidents_bigdata_pipeline_spark.plans.queries import (
+        _adaptive_input_split,
+    )
+
+    assert spark.sparkContext.defaultParallelism > 1
+    gone = _Scan(["file:/nonexistent-dir/part-00000.parquet"])
+    assert _adaptive_input_split(spark, gone) is gone
+    unlisted = _Scan(error=PySparkException(message="listing failed"))
+    assert _adaptive_input_split(spark, unlisted) is unlisted
+    remote = _Scan(["s3a://bucket/part-00000.parquet"])
+    assert _adaptive_input_split(spark, remote) is remote
+    with pytest.raises(AttributeError):
+        _adaptive_input_split(spark, _Scan(error=AttributeError("typo")))

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from us_accidents_bigdata_pipeline_spark.operators.similarity import (
@@ -438,3 +439,38 @@ def test_dynamic_schema_udtf_analyze(spark):
             "SELECT * FROM _udtf_t t, "
             "LATERAL unpivot_columns_t(struct(t.a), 'zz') u"
         ).collect()
+
+
+@pytest.mark.parametrize("name", ["repetition_quality_docs", "heaps_law_fit_docs"])
+def test_whitespace_only_docs_match_oracle(spark, tmp_path, name):
+    """Tab-, newline- and mixed-whitespace-only docs have zero tokens:
+    they must drop out exactly as in the DuckDB oracle (which filters
+    empty tokens). A space-only ``trim(text) != ''`` pre-filter let
+    them through — an extra 0-token row with 0/0 ratios in
+    repetition_stats, and extra checkpoint rows in heaps_law_fit for
+    buckets holding only such docs (ids 3-5 are buckets 3-5 of 10)."""
+    import duckdb
+
+    from us_accidents_bigdata_pipeline_spark.plans import REGISTRY
+
+    from .test_oracle import _norm_rows
+
+    rows = [
+        (1, "a b c"), (2, "a b d d"), (3, "\t"), (4, "\n"), (5, " \t "),
+        (6, "a e"), (7, "f f f f"), (8, "g  h"), (9, None), (10, "h i"),
+    ]
+    path = tmp_path / "documents.parquet"
+    _docs(spark, rows).coalesce(1).write.parquet(str(path))
+    spec = REGISTRY[name]
+    sdf = spec.builder(spark, str(tmp_path))
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
+        res = con.execute(spec.oracle)
+        dcols = [d[0] for d in res.description]
+        drows = [tuple(r) for r in res.fetchall()]
+    finally:
+        con.close()
+    assert _norm_rows(list(sdf.columns), [tuple(r) for r in sdf.collect()]) == (
+        _norm_rows(dcols, drows)
+    )

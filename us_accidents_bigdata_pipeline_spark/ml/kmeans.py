@@ -68,8 +68,17 @@ def k_sweep(
     its iteration barriers, and overlapping the candidates fills those
     gaps — measured ~2x on the pipeline's 3-candidate sweep at the
     200K tier. Results are deterministic per k (seeded); the thread
-    pool only changes scheduling, never the math."""
+    pool only changes scheduling, never the math.
+
+    Each fit is wrapped with ``inheritable_thread_target`` at submit
+    time, so its jobs carry the caller's local properties (job group,
+    job tags, ``spark.scheduler.pool``): a sweep started from a
+    pipeline stage stays in that stage's FAIR pool and is cancelled
+    with it. One wrap per fit, because the wrapper hands its thread
+    the very properties object it cloned."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
 
     def one(k: int) -> tuple[int, float, float]:
         model = fit_kmeans(df, k, features_col, max_iter=max_iter, seed=seed)
@@ -78,8 +87,10 @@ def k_sweep(
         wssse = model.summary.trainingCost
         return (k, sil, wssse)
 
+    inherit = inheritable_thread_target(df.sparkSession)
     with ThreadPoolExecutor(max_workers=min(len(ks), 4)) as pool:
-        results = list(pool.map(one, ks))
+        futures = [pool.submit(inherit(one), k) for k in ks]
+        results = [f.result() for f in futures]
     best_k = max(results, key=lambda t: t[1])[0]
     return best_k, results
 

@@ -176,7 +176,8 @@ def result_documents(
         (model_name, k, float(v), run_timestamp, parameters)
         for k, v in metrics.items()
     ]
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         rows,
         "model_name string, metric_name string, metric_value double, "
         "run_timestamp string, parameters string",
@@ -205,11 +206,24 @@ def cluster_centers_document(spark, stats_rows: list):
                 float(s.get("avg_Severity") or 0.0),
             )
         )
-    return spark.createDataFrame(
+    return _local_frame(
+        spark,
         rows,
         "cluster_id int, center_lat double, center_lng double, "
         "point_count long, avg_severity double",
     )
+
+
+def _local_frame(spark, rows: list[tuple], schema: str):
+    """A few driver-side rows as a DataFrame. Going through pandas lets
+    the Arrow path plan a ``LocalTableScan`` that runs in the JVM; a
+    ``createDataFrame`` of a Python list plans a Python RDD, whose
+    every task waits for a Python worker (~2 s of a task slot each on
+    a cold session, for a handful of rows)."""
+    import pandas as pd
+
+    names = [col.split()[0] for col in schema.split(",")]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
 
 
 def binary_auc_severe(

@@ -581,6 +581,7 @@ def ivf_fit_assign(
     boundary (measured on the sf0.01 corpus: nprobe=2 recall@5 goes
     0.78 → 0.95 at n_cells=4 with m=2).
     """
+    from ..tuning import arrow_to_pandas
     from .sample import count_targeted_sample
 
     if fit_mode == "local":
@@ -595,9 +596,7 @@ def ivf_fit_assign(
         sample = count_targeted_sample(
             slim, fit_sample_rows, total=slim.count(), seed=seed
         )
-        spark = df.sparkSession
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        pdf = sample.toPandas()
+        pdf = arrow_to_pandas(sample)
         X = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
         X = X[np.lexsort(X.T[::-1])]
         centers = _kmeanspp_lloyd(X, n_cells, seed)
@@ -1085,6 +1084,7 @@ def pq_train(
     until the re-rank."""
     import numpy as np
 
+    from ..tuning import arrow_to_pandas
     from .sample import count_targeted_sample
 
     slim = df.select(F.col(vec_col).cast("array<double>").alias("_v"))
@@ -1101,9 +1101,7 @@ def pq_train(
         sample = count_targeted_sample(
             slim, fit_sample_rows, total=n, seed=seed
         )
-        spark = df.sparkSession
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        pdf = sample.toPandas()
+        pdf = arrow_to_pandas(sample)
         if len(pdf) == 0:
             raise ValueError("pq_train: empty input")
         dim = len(pdf["_v"].iloc[0])

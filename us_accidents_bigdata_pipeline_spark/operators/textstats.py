@@ -137,6 +137,17 @@ def repetition_flag(
     )
 
 
+def _has_token(text: Column | str) -> Column:
+    """True when the text has at least one non-empty ``word_tokens``
+    token, i.e. one non-whitespace character (NULL for NULL text).
+    A raw-column predicate, so a filter on it never drags the tokenize
+    expression below a Project. ``trim(text) != ''`` is NOT the same:
+    trim strips only spaces, so tab- or newline-only text passes it
+    with zero tokens."""
+    c = F.col(text) if isinstance(text, str) else text
+    return c.rlike(r"\S")
+
+
 def repetition_stats(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -187,18 +198,12 @@ def repetition_stats(
     n_tok = F.col("top_c") / F.col("n_tokens")
     d_ratio = F.col("n_distinct") / F.col("n_tokens")
     return (
-        # the no-token exclusion is a PRE-filter on the raw text:
-        # trim(text) != '' holds exactly when >= 1 non-empty token
-        # exists (NULL text -> NULL -> dropped) — row-identical to the
-        # former filter(n_tokens > 0), which the optimizer pushed
-        # below the Project and re-evaluated the tokenize expression
-        # inside the predicate (round-13 filter-under-Project lesson)
-        df.filter(
-            F.trim(
-                F.col(text_col) if isinstance(text_col, str) else text_col
-            )
-            != ""
-        )
+        # the no-token exclusion is a PRE-filter on the raw text
+        # (``_has_token``), row-identical to the former
+        # filter(n_tokens > 0), which the optimizer pushed below the
+        # Project and re-evaluated the tokenize expression inside the
+        # predicate (round-13 filter-under-Project lesson)
+        df.filter(_has_token(text_col))
         .select(
             F.col(id_col),
             F.size(toks).cast("long").alias("n_tokens"),
@@ -1089,18 +1094,15 @@ def heaps_law_fit(
     # explode→groupBy(id)→count (docs with zero non-empty tokens —
     # incl. NULL text, where ANSI size() yields NULL (-1 legacy) —
     # produced no group row before). The no-token exclusion is a
-    # PRE-filter on the raw text: trim(text) != '' holds exactly when
-    # >= 1 non-empty whitespace token exists (NULL text -> NULL ->
+    # PRE-filter on the raw text (``_has_token``): it holds exactly
+    # when >= 1 non-empty whitespace token exists (NULL text -> NULL ->
     # dropped), so it is row-identical to the former
     # filter(_n_tok > 0) — which the optimizer pushed below the
     # Project, substituting the whole tokenize-HOF into the predicate
     # and evaluating it twice per row (the round-13
     # filter-under-Project lesson; greatest() stays as the NULL/-1
     # belt against exotic inputs).
-    doc_tokens = df.filter(
-        F.trim(F.col(text_col) if isinstance(text_col, str) else text_col)
-        != ""
-    ).select(
+    doc_tokens = df.filter(_has_token(text_col)).select(
         F.col(id_col),
         F.greatest(
             F.size(F.filter(word_tokens(text_col), lambda t: t != "")),

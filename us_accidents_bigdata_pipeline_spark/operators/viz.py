@@ -94,7 +94,7 @@ def confusion_heatmap_svg(
 
 
 def export_chart_suite(
-    cleaned: DataFrame,
+    cleaned: DataFrame | None,
     out_dir: str,
     clustered: DataFrame | None = None,
     predictions: DataFrame | None = None,
@@ -109,7 +109,11 @@ def export_chart_suite(
     Collect safety: every collected frame is an aggregate or a capped
     sample — bar/line inputs are ≤ dozens of rows, scatters are bounded
     by ``max_scatter_points`` — so the driver pull is O(chart), never
-    O(data)."""
+    O(data).
+
+    Each chart reads only its own input, so the suite can be rendered
+    piecewise into one ``out_dir`` as the inputs become ready: pass
+    ``cleaned=None`` to render only the model charts."""
     import os
 
     from .render_svg import render_bar_svg, render_line_svg, render_scatter_svg
@@ -123,7 +127,7 @@ def export_chart_suite(
             f.write(svg)
         written.append(path)
 
-    cols = set(cleaned.columns)
+    cols = set(cleaned.columns) if cleaned is not None else set()
     if "Severity" in cols:
         rows = severity_histogram(cleaned).collect()
         _write(

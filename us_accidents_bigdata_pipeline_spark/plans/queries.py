@@ -123,9 +123,19 @@ def _adaptive_input_split(spark: SparkSession, df: DataFrame) -> DataFrame:
     column pruning pass through Repartition, so PushedFilters /
     ReadSchema pins are unaffected; results are partition-layout
     independent by the driver's own layout sweep.
+
+    The split is an optimisation, so a scan whose file list or sizes
+    cannot be read (a Spark error listing the relation, a file gone
+    or unreadable) is returned untouched; any other exception is a
+    bug and propagates.
     """
+    from urllib.parse import unquote, urlparse
+
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    par = spark.sparkContext.defaultParallelism
     try:
-        par = spark.sparkContext.defaultParallelism
         files = df.inputFiles()
         if not files or len(files) >= par:
             return df
@@ -136,14 +146,12 @@ def _adaptive_input_split(spark: SparkSession, df: DataFrame) -> DataFrame:
                 # scan alone (production layouts bring their own
                 # parallelism)
                 return df
-            from urllib.parse import unquote, urlparse
-
             total += os.path.getsize(unquote(urlparse(uri).path))
-        if total < _SPLIT_MIN_BYTES:
-            return df
-        return df.repartition(par)
-    except Exception:
+    except (OSError, PySparkException, Py4JJavaError):
         return df
+    if total < _SPLIT_MIN_BYTES:
+        return df
+    return df.repartition(par)
 
 
 # ---------------------------------------------------------------------

@@ -15,6 +15,13 @@ Re-expresses the reference's session/tuning surface (SURVEY §2.12 X5/X6:
 - Shuffle partitions default to local parallelism for local[] masters;
   on a real cluster pass ``shuffle_partitions`` ~ 2-3x total cores and
   let AQE coalesce down.
+- FAIR scheduling: jobs submitted from different driver threads under
+  different ``spark.scheduler.pool`` local properties share the task
+  slots instead of queueing FIFO behind each other (the accidents
+  pipeline runs its model stages concurrently, one pool each, declared
+  in ``fairscheduler.xml``). Jobs that name no pool all land in the
+  ``default`` pool, which stays FIFO, so single-threaded callers
+  schedule exactly as before.
 """
 
 from __future__ import annotations
@@ -24,6 +31,12 @@ import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+# FAIR pool declarations (an undeclared pool works too, but Spark logs
+# a warning the first time each one is used)
+FAIR_POOLS_FILE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "fairscheduler.xml"
+)
 
 # SparkContext ids that already received the package zip (addPyFile is
 # sticky for the context's lifetime; re-adding is redundant work).
@@ -91,6 +104,7 @@ def get_spark(
         .config("spark.driver.maxResultSize", "8g")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(shuffle_partitions))
+        .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -110,6 +124,11 @@ def get_spark(
         # (region/nation/supplier) broadcast automatically. Explicit
         # F.broadcast hints are used where the stats are not available.
     )
+    # Spark refuses to start on a missing allocation file (the package
+    # imported from a zip carries no data files); the pools then run
+    # with the defaults
+    if os.path.isfile(FAIR_POOLS_FILE):
+        builder = builder.config("spark.scheduler.allocation.file", FAIR_POOLS_FILE)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

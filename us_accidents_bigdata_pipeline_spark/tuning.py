@@ -58,8 +58,21 @@ def safe_to_pandas(df: DataFrame, max_rows: int = 5_000_000) -> pd.DataFrame:
             f"toPandas() of {n} rows exceeds guard ({max_rows}); "
             "sample or aggregate first"
         )
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    return arrow_to_pandas(df)
+
+
+_ARROW_CONF = "spark.sql.execution.arrow.pyspark.enabled"
+
+
+def arrow_to_pandas(df: DataFrame) -> pd.DataFrame:
+    """Unguarded Arrow-batched toPandas, for frames bounded by
+    construction. The one place that turns the session's Arrow conf
+    on: it writes the conf only when it is off (``get_spark`` turns it
+    on), so stages running on concurrent driver threads never mutate
+    session-wide state under each other."""
+    conf = df.sparkSession.conf
+    if conf.get(_ARROW_CONF, "false").lower() != "true":
+        conf.set(_ARROW_CONF, "true")
     return df.toPandas()
 
 
